@@ -14,6 +14,14 @@ Deliberate fixes over the reference (SURVEY.md §4.3 "fix by decree"):
     (main_reglogit_generate_txt.py:84-89);
   - persistence is PipelineModel.save/load — the reference's pickle
     round-trip (sauvegarde_model.py:8-12) is documented broken.
+
+Cross-validation featurizes once (_crossval): the tokenizer, stopword
+filter and HashingTF learn nothing from the data, so they run once into
+a cached frame and CV fits only [IDF, classifier] per fold x grid point;
+IDF, the one stateful stage, still fits on each fold's training rows.
+`_kFold` draws `rand(seed)` per partition and the cache keeps the scan's
+partitions and row order (never widen it), so folds, fits and metrics
+are bit-identical to a CV over the full pipeline.
 """
 
 from __future__ import annotations
@@ -34,7 +42,7 @@ from pyspark.ml.feature import (
     RegexTokenizer,
     StopWordsRemover,
 )
-from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
+from pyspark.ml.tuning import CrossValidator, CrossValidatorModel, ParamGridBuilder
 from pyspark.sql import DataFrame, SparkSession
 
 from projetbigdata_spark.functions.text import STOPWORDS
@@ -123,6 +131,44 @@ def fit_and_score(
     return model, scored, acc
 
 
+def _crossval(
+    spark: SparkSession, sf_dir: str, kind: str, num_features: int,
+    grid: dict[str, list], evaluator, num_folds: int, schema: str,
+) -> tuple[CrossValidatorModel, DataFrame]:
+    """M6 core: seeded CV of the `kind` pipeline over `grid` (classifier
+    param name -> values) with the text stages hoisted (module
+    docstring). Returns the model, whose bestModel scores raw documents,
+    and one `schema` row per grid point: its values, then the metric."""
+    from projetbigdata_spark.sources.catalog import load_labeled_documents
+
+    stages = build_pipeline(kind, num_features).getStages()
+    clf = stages[-1]
+    builder = ParamGridBuilder()
+    for name, values in grid.items():
+        builder.addGrid(clf.getParam(name), values)
+    param_maps = builder.build()
+    stateless = PipelineModel(stages[:3])
+    docs = stateless.transform(load_labeled_documents(spark, sf_dir)).cache()
+    try:
+        cv_model = CrossValidator(
+            estimator=Pipeline(stages=stages[3:]),
+            estimatorParamMaps=param_maps,
+            evaluator=evaluator,
+            numFolds=num_folds,
+            seed=SEED,
+            parallelism=4,  # folds x grid points fit; metrics are seeded
+            # per-fold averages, so parallelism never changes the numbers
+        ).fit(docs)
+    finally:
+        docs.unpersist()
+    cv_model.bestModel = PipelineModel([*stateless.stages, *cv_model.bestModel.stages])
+    rows = [
+        (*(pm[clf.getParam(name)] for name in grid), float(m))
+        for pm, m in zip(param_maps, cv_model.avgMetrics)
+    ]
+    return cv_model, spark.createDataFrame(rows, schema)
+
+
 def crossval_fit_dt(
     spark: SparkSession, sf_dir: str
 ) -> tuple["CrossValidator", DataFrame]:
@@ -131,79 +177,32 @@ def crossval_fit_dt(
     CrossValidator at its numFolds=3 default), Multiclass evaluator
     with Spark 1.x `'precision'` == modern `'accuracy'` (the metric was
     renamed in SPARK-15617; `baseOn([evaluator.metricName,'precision'])`
-    pinned the same thing). Seeded — the one decreed fix."""
-    from projetbigdata_spark.sources.catalog import load_labeled_documents
-
-    docs = load_labeled_documents(spark, sf_dir)
+    pinned the same thing). Seeded — the one decreed fix. Text stages
+    run once, outside the folds (module docstring); same accuracies."""
     # parity lives in the grid/folds/metric; the hash width is ours to
     # pick — 2^10 keeps the 6 CV fits fast at check scale (DT split
     # search is linear in feature count)
-    pipe = build_pipeline("dt", num_features=1 << 10)
-    dt = pipe.getStages()[-1]
-    grid = (
-        ParamGridBuilder()
-        .addGrid(dt.maxDepth, [10, 20])
-        .build()
+    return _crossval(
+        spark, sf_dir, "dt", 1 << 10, {"maxDepth": [10, 20]},
+        MulticlassClassificationEvaluator(
+            labelCol="label", predictionCol="prediction", metricName="accuracy"
+        ),
+        num_folds=3, schema="max_depth int, avg_accuracy double",
     )
-    evaluator = MulticlassClassificationEvaluator(
-        labelCol="label", predictionCol="prediction", metricName="accuracy"
-    )
-    cv = CrossValidator(
-        estimator=pipe,
-        estimatorParamMaps=grid,
-        evaluator=evaluator,
-        numFolds=3,
-        seed=SEED,
-        parallelism=4,  # folds x grid points fit; metrics are seeded
-        # per-fold averages, so parallelism never changes the numbers
-    )
-    cv_model = cv.fit(docs)
-    rows = [
-        (int(pm[dt.maxDepth]), float(m))
-        for pm, m in zip(grid, cv_model.avgMetrics)
-    ]
-    metrics = spark.createDataFrame(rows, "max_depth int, avg_accuracy double")
-    return cv_model, metrics
 
 
 def crossval_fit(
     spark: SparkSession, sf_dir: str
 ) -> tuple[CrossValidator, DataFrame]:
-    """M6: seeded CrossValidator over the reference's LR grid shape
-    (maxIter x regParam, main_reglogit.py:92-95), parallelized."""
-    from projetbigdata_spark.sources.catalog import load_labeled_documents
-
-    docs = load_labeled_documents(spark, sf_dir)
-    pipe = build_pipeline("lr", num_features=1 << 12)
-    lr = pipe.getStages()[-1]
-    grid = (
-        ParamGridBuilder()
-        .addGrid(lr.regParam, [0.01, 0.1])
-        .addGrid(lr.maxIter, [5, 10])
-        .build()
+    """M6: seeded 2-fold CrossValidator over the reference's LR grid
+    shape (maxIter x regParam, main_reglogit.py:92-95), parallelized.
+    Text stages run once, outside the folds (module docstring)."""
+    return _crossval(
+        spark, sf_dir, "lr", 1 << 12,
+        {"regParam": [0.01, 0.1], "maxIter": [5, 10]},
+        BinaryClassificationEvaluator(labelCol="label"),
+        num_folds=2, schema="reg_param double, max_iter int, avg_auc double",
     )
-    evaluator = BinaryClassificationEvaluator(labelCol="label")
-    cv = CrossValidator(
-        estimator=pipe,
-        estimatorParamMaps=grid,
-        evaluator=evaluator,
-        numFolds=2,
-        seed=SEED,
-        parallelism=4,
-    )
-    cv_model = cv.fit(docs)
-    rows = [
-        (
-            float(pm[lr.regParam]),
-            int(pm[lr.maxIter]),
-            float(m),
-        )
-        for pm, m in zip(grid, cv_model.avgMetrics)
-    ]
-    metrics = spark.createDataFrame(
-        rows, "reg_param double, max_iter int, avg_auc double"
-    )
-    return cv_model, metrics
 
 
 def quality_classifier_fit(

@@ -59,11 +59,12 @@ def tune(spark: SparkSession) -> SparkSession:
     # contamination_ngram_overlap 6.4 -> 1.2 s, corpus_curate_calibrated
     # 8.5 -> 4.7 s, trigram scorer 2.5 -> 1.7 s. The inferred filter
     # only ever pays for itself when it prunes a STORED array column at
-    # the scan; no registered query explodes a stored array.
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
+    # the scan; no registered query explodes a stored array. Appended
+    # to the rules the caller already excluded, once, in order.
+    key = "spark.sql.optimizer.excludedRules"
+    rules = spark.conf.get(key, "").split(",")
+    rules.append("org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    spark.conf.set(key, ",".join(dict.fromkeys(r.strip() for r in rules if r.strip())))
     _quiet_bounded_window_warning(spark)
     return spark
 

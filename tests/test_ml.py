@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -23,19 +24,89 @@ def test_fit_and_score_deterministic(spark):
     assert acc == acc2
 
 
-def test_crossval_dt_reference_grid(spark):
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _run_cv(spark, kind: str):
+    """One CV entry-point call on SF_SMOKE: (model, metric rows) — and
+    no cached frame may outlive the call. A JVM GC during the call can
+    unpersist RDDs that earlier tests left unreferenced, so the check
+    is that no RDD id is persisted after the call that was not before."""
+    from projetbigdata_spark.ml.pipeline import crossval_fit, crossval_fit_dt
+
+    before = _persistent_rdds(spark)
+    model, metrics = {"lr": crossval_fit, "dt": crossval_fit_dt}[kind](spark, SF_SMOKE)
+    assert _persistent_rdds(spark) <= before
+    return model, metrics.collect()
+
+
+@pytest.fixture(scope="module")
+def cv_runs(spark):
+    """Each classifier's CV run, shared by the tests below."""
+    return {kind: _run_cv(spark, kind) for kind in ("lr", "dt")}
+
+
+def test_crossval_dt_reference_grid(spark, cv_runs):
     """M6 reference parity (script1.py:71-82): the DT grid is exactly
     maxDepth [10, 20], 3-fold, accuracy metric — and seeded, so the
     two grid-point metrics reproduce bit-identically."""
-    from projetbigdata_spark.ml.pipeline import crossval_fit_dt
-
-    _, metrics = crossval_fit_dt(spark, SF_SMOKE)
-    rows = {r.max_depth: r.avg_accuracy for r in metrics.collect()}
+    rows = {r.max_depth: r.avg_accuracy for r in cv_runs["dt"][1]}
     assert sorted(rows) == [10, 20]
     assert all(0.0 <= v <= 1.0 for v in rows.values())
-    _, metrics2 = crossval_fit_dt(spark, SF_SMOKE)
-    rows2 = {r.max_depth: r.avg_accuracy for r in metrics2.collect()}
+    rows2 = {r.max_depth: r.avg_accuracy for r in _run_cv(spark, "dt")[1]}
     assert rows == rows2
+
+
+@pytest.mark.parametrize("kind", ["lr", "dt"])
+def test_hoisted_crossval_matches_full_pipeline_cv(spark, cv_runs, kind):
+    """The CV entry points featurize once and cross-validate only
+    [IDF, classifier]. A plain CrossValidator over the full
+    build_pipeline — same grid, evaluator, folds and seed — must give
+    exactly the same per-grid-point metrics and best model."""
+    from pyspark.ml.tuning import CrossValidator
+
+    from projetbigdata_spark.ml.pipeline import build_pipeline
+    from projetbigdata_spark.sources.catalog import load_labeled_documents
+
+    model = cv_runs[kind][0]
+    pipe = build_pipeline(kind, model.bestModel.stages[2].getNumFeatures())
+    clf = pipe.getStages()[-1]
+    grid = [
+        {clf.getParam(p.name): v for p, v in pm.items()}
+        for pm in model.getEstimatorParamMaps()
+    ]
+    docs = load_labeled_documents(spark, SF_SMOKE)
+    twin = CrossValidator(
+        estimator=pipe,
+        estimatorParamMaps=grid,
+        evaluator=model.getEvaluator(),
+        numFolds=model.getNumFolds(),
+        seed=model.getSeed(),
+        parallelism=4,
+    ).fit(docs)
+    assert model.avgMetrics == twin.avgMetrics
+    a = model.bestModel.transform(docs).select("doc_id", "prediction")
+    b = twin.bestModel.transform(docs).select("doc_id", "prediction")
+    assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
+
+
+@pytest.mark.parametrize(
+    "kind, classifier",
+    [("lr", "LogisticRegressionModel"), ("dt", "DecisionTreeClassificationModel")],
+)
+def test_crossval_best_model_scores_raw_documents(spark, cv_runs, kind, classifier):
+    """bestModel is a raw-text model again: it carries the hoisted
+    stages in front, so it scores load_labeled_documents output
+    directly, and its last stage is still the classifier."""
+    from projetbigdata_spark.sources.catalog import load_labeled_documents
+
+    best = cv_runs[kind][0].bestModel
+    assert type(best.stages[-1]).__name__ == classifier
+    docs = load_labeled_documents(spark, SF_SMOKE)
+    preds = best.transform(docs).select("doc_id", "prediction").collect()
+    assert len(preds) == docs.count()
+    assert {r.prediction for r in preds} <= {0.0, 1.0}
 
 
 def test_model_save_load_roundtrip(spark):

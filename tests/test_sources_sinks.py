@@ -13,6 +13,9 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -74,6 +77,26 @@ def test_catalog_rejects_unknown_table(spark):
 
     with _pytest.raises(KeyError, match="unknown table"):
         load_table(spark, SF_SMOKE, "nope")
+
+
+@pytest.mark.parametrize(
+    "dirname", ["sp ace", "pct%41x", "pct%zz", "hash#frag", "q?x"]
+)
+def test_scan_bytes_reads_uri_escaped_dirs(spark, tmp_path, dirname):
+    """inputFiles() returns percent-encoded URIs; _scan_bytes decodes
+    them back to the on-disk path, so a directory name that is itself
+    `%`-, `#`-, `?`- or space-laden still yields the true file size
+    (None would silently disable parallel_scan's bytes_per_task cap)."""
+    import shutil
+
+    from projetbigdata_spark.sources.catalog import _scan_bytes
+
+    src = f"{SF_SMOKE}/documents.parquet"
+    d = tmp_path / dirname
+    d.mkdir()
+    shutil.copyfile(src, d / "documents.parquet")
+    df = spark.read.parquet(str(d / "documents.parquet"))
+    assert _scan_bytes(df) == os.path.getsize(src)
 
 
 def test_partitioned_parquet_sink_prunes(spark, tmp_path):
