@@ -175,15 +175,6 @@ def _tag(col: Column) -> Column:
     )
 
 
-def rule_pos_tags(tokens: Column) -> Column:
-    """T3 fallback tier: deterministic rule tags over a tokens array
-    (universal tagset subset DET/VERB/ADJ/NOUN). Divergence from
-    nltk.pos_tag is documented here: the rule tagger is context-free,
-    so e.g. noun/verb homographs always tag by the word list. The
-    fidelity path is functions/nltk_tier.pos_tags when nltk imports."""
-    return F.transform(tokens, _tag)
-
-
 def pos_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F4: keep word trigram i iff its tag trigram is authorized.
 

@@ -95,10 +95,13 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
     )
-    revenue = F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    # exact decimal sum, as in q7_nation_volume (half-cent rounding)
+    disc = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
+        "decimal(18,4)"
+    )
     return (
         joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(revenue, 2).alias("revenue"))
+        .agg(F.round(F.sum(disc), 2).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
     )
@@ -106,7 +109,8 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q3_SQL = """
 SELECT l_orderkey, o_orderdate, o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+       CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+                           AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
 FROM customer
 JOIN orders   ON o_custkey = c_custkey
 JOIN lineitem ON l_orderkey = o_orderkey

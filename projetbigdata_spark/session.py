@@ -87,7 +87,7 @@ def _quiet_bounded_window_warning(spark: SparkSession) -> None:
     ERROR, leaving every other WARN (including genuinely unbounded
     user windows elsewhere in the JVM's logs) alone. Guard rails stay:
     the exchange-count and shuffle-byte gates in test_plans /
-    test_shuffle_budget would catch a registered query that grew an
+    test_oracle_parity would catch a registered query that grew an
     unbounded single-partition sort regardless of what gets logged."""
     try:
         jvm = spark.sparkContext._jvm

@@ -9,6 +9,9 @@ Catalyst for free, and scales to any number of files/executors.
 
 from __future__ import annotations
 
+import functools
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -196,7 +199,10 @@ def parallel_scan(
     target = spark.sparkContext.defaultParallelism
     if bytes_per_task is not None:
         size = _scan_bytes(df)
-        if size is not None:
+        if size is None:
+            path = cache_key or ",".join(df.inputFiles())
+            _warn_uncapped(spark.sparkContext.applicationId, path)
+        else:
             target = min(target, max(1, -(-size // bytes_per_task)))
     width = None if df.rdd.getNumPartitions() >= target else target
     if key is not None:
@@ -204,6 +210,14 @@ def parallel_scan(
             del _WIDTH_CACHE[stale]
         _WIDTH_CACHE[key] = width
     return df if width is None else df.repartition(width)
+
+
+@functools.cache
+def _warn_uncapped(app: str, path: str) -> None:
+    """Log, once per app and table path, that the width cap is off."""
+    logging.getLogger(__name__).warning(
+        "scan size of %s unknown: bytes_per_task cap disabled", path
+    )
 
 
 def _scan_bytes(df: DataFrame) -> int | None:

@@ -59,7 +59,7 @@ CEILINGS = {k: max(1.5 * v, 1.5) for k, v in _CALIBRATED.items()}
 # driver battery ran at loadavg 8.35. Skip when the 1-minute load
 # already exceeds a quarter of the cores before we start; structural
 # regressions (2-10x) are still caught on every idle run, and the
-# exchange-count + shuffle-byte gates (test_plans/test_shuffle_budget)
+# exchange-count + shuffle-byte gates (test_plans/test_oracle_parity)
 # remain load-independent backstops.
 _LOAD_CAP = max(4.0, 0.25 * (os.cpu_count() or 8))
 

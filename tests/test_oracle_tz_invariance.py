@@ -43,9 +43,13 @@ def _run_all(tz: str) -> dict[str, str]:
     return out
 
 
+@pytest.fixture(scope="module")
+def utc():
+    return _run_all("UTC")
+
+
 @pytest.mark.parametrize("tz", ["America/New_York", "Asia/Tokyo"])
-def test_every_oracle_is_timezone_invariant(tz):
-    utc = _run_all("UTC")
+def test_every_oracle_is_timezone_invariant(utc, tz):
     other = _run_all(tz)
     drifted = sorted(n for n in utc if utc[n] != other[n])
     assert not drifted, (

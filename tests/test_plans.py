@@ -8,6 +8,7 @@ these tests make that a CI failure instead."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from projetbigdata_spark import registry
 from projetbigdata_spark.plans import introspect as pi
@@ -531,6 +532,26 @@ EXCHANGE_BUDGET = {
     # one consumer)
     "corpus_ccnet_select_incremental": 39,
 }
+
+
+def test_shuffle_write_reads_the_stages_run_inside(spark):
+    """The byte reader counts the shuffle of a small aggregation, the
+    same shuffle launched from a worker thread (which does not inherit
+    the caller's job group), and nothing for a callable that runs no
+    job."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def agg():
+        spark.range(10_000).groupBy((F.col("id") % 7).alias("k")).count().collect()
+
+    def in_thread():
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            pool.submit(agg).result()
+
+    direct = pi.shuffle_write(spark, agg)
+    assert direct.bytes > 0 and direct.records > 0
+    assert pi.shuffle_write(spark, in_thread).bytes == direct.bytes
+    assert pi.shuffle_write(spark, lambda: None) == (0, 0, 0)
 
 
 @pytest.mark.parametrize("name", sorted(EXCHANGE_BUDGET))

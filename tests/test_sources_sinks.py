@@ -153,3 +153,21 @@ def test_cli_entry_points(spark, capsys):
     assert "rows-only" in capsys.readouterr().out
 
     assert main(["oracle", "nonexistent_query"]) == 2
+
+
+def test_unknown_scan_size_warns_once_per_table(spark, monkeypatch, caplog):
+    """When _scan_bytes cannot size a scan, parallel_scan falls back to
+    full width; that is logged once per app and table, not per load."""
+    from projetbigdata_spark.sources import catalog
+
+    monkeypatch.setattr(catalog, "_scan_bytes", lambda df: None)
+    catalog._warn_uncapped.cache_clear()
+    for _ in range(2):
+        catalog.parallel_scan(
+            spark,
+            catalog.load_table(spark, SF_SMOKE, "documents"),
+            bytes_per_task=catalog.DOC_BYTES_PER_TASK,
+        )
+    warned = [r for r in caplog.records if "cap disabled" in r.getMessage()]
+    assert len(warned) == 1
+    assert "documents.parquet" in warned[0].getMessage()

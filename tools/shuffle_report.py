@@ -4,32 +4,32 @@ tests/test_plans.py. Exchange counts catch a NEW shuffle; this report
 catches a shuffle that silently got FATTER (lost pushdown, lost
 pre-aggregation, wider rows through an explode).
 
-Uses a dedicated session with the UI enabled and reads per-stage
-shuffleWriteBytes from the status REST API after each query's noop
-write (plan-tree metric walking is unreliable under AQE reuse).
+Each query's noop write runs inside
+`projetbigdata_spark.plans.introspect.shuffle_write`, which sums
+shuffleWriteBytes over the stages it completed, read from the
+session's own status store (plan-tree metric walking is unreliable
+under AQE reuse). The pytest battery uses the same reader: each
+budgeted query's oracle-parity test asserts its bytes against
+`budget_for(SF_CHECK)`, so this tool is only for manual runs.
 
 Usage:
-    python tools/shuffle_report.py [--sf /root/testdata/sf0.1]  # SHUFFLE.md
-    python tools/shuffle_report.py --check                      # CI gate
+    python tools/shuffle_report.py [--sf DIR]          # write SHUFFLE.md
+    python tools/shuffle_report.py --check [--sf DIR]  # budgeted only
 
 --check (VERDICT r3 item 8) runs only the budgeted queries and exits 1
 if any query's shuffle write exceeds its pinned byte ceiling — the
 per-query shuffle-VOLUME twin of test_plans.py's exchange-count
-budgets, wired into CI via tests/test_shuffle_budget.py.
+budgets. It is the only consumer of the sf0.1 table.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-UI_PORT = 4079
 
 # bench headliners + the curation tier (same set test_bench_budget pins,
 # plus the late-r3 operators whose scale posture SCALE.md documents)
@@ -250,14 +250,13 @@ BYTE_BUDGET_MB = {
     "corpus_gopher_repetition_clean": 69.2,
 }
 
-# sf0.01 twin of the table above (r13): the CI gate moved to sf0.01 so
-# the pytest battery's dedicated-JVM subprocess costs ~60s instead of
-# 200+s (the r12 driver battery timed out mid-run with the sf0.1 gate
-# under box load). Same invariant — a shuffle that gets FATTER (lost
-# pruning / partial agg, strings where hashed keys traveled) breaches
-# at any SF proportionally. Ceilings are 2x the r13 sf0.01 measurement
-# with a 0.3 MB floor absorbing absolute framing noise; the sf0.1
-# table above stays for manual full-scale runs
+# sf0.01 twin of the table above (r13), the one the pytest battery
+# asserts inside tests/test_oracle_parity.py at its own sf0.01 run.
+# Same invariant — a shuffle that gets FATTER (lost pruning / partial
+# agg, strings where hashed keys traveled) breaches at any SF
+# proportionally. Ceilings are 2x the r13 sf0.01 measurement with a
+# 0.3 MB floor absorbing absolute framing noise; the sf0.1 table above
+# stays for manual full-scale runs
 # (`python tools/shuffle_report.py --check` with the default --sf).
 BYTE_BUDGET_MB_SF001 = {
     "bow_vectorize": 0.4,
@@ -307,101 +306,61 @@ BYTE_BUDGET_MB_SF001 = {
 }
 
 
+def budget_for(sf_dir: str) -> dict[str, float]:
+    """The byte-budget table for a fixture dir: sf0.01 has its own."""
+    if sf_dir.rstrip("/").endswith("sf0.01"):
+        return BYTE_BUDGET_MB_SF001
+    return BYTE_BUDGET_MB
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument(
         "--check",
         action="store_true",
-        help="gate budgeted queries against BYTE_BUDGET_MB; exit 1 on breach",
-    )
-    ap.add_argument(
-        "--budget-scale",
-        type=float,
-        default=1.0,
-        help="multiply every ceiling (e.g. 0.1 to demo a failing gate)",
+        help="gate budgeted queries against their byte budget; exit 1 on breach",
     )
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from projetbigdata_spark import registry
+    from projetbigdata_spark.plans.introspect import shuffle_write
+    from projetbigdata_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(UI_PORT))
-        .appName("shuffle-report")
-        .getOrCreate()
-    )
+    cpus = os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    spark = get_spark("shuffle-report")
+    spark.conf.set("spark.sql.shuffle.partitions", cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from projetbigdata_spark import registry
-
     queries, _ = registry.collect()
-    app_id = spark.sparkContext.applicationId
-    url = f"http://localhost:{UI_PORT}/api/v1/applications/{app_id}/stages"
-
-    def stages():
-        return json.load(urllib.request.urlopen(url))
-
-    budget = (
-        BYTE_BUDGET_MB_SF001
-        if args.sf.rstrip("/").endswith("sf0.01")
-        else BYTE_BUDGET_MB
-    )
-    run_list = sorted(budget) if args.check else QUERIES
+    budget = budget_for(args.sf)
     rows = []
-    for name in run_list:
-        before = {s["stageId"] for s in stages()}
+    for name in sorted(budget) if args.check else QUERIES:
         t0 = time.time()
-        queries[name](spark, args.sf).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        sec = time.time() - t0
-        new = [
-            s
-            for s in stages()
-            if s["stageId"] not in before and s["status"] == "COMPLETE"
-        ]
-        rows.append(
-            {
-                "name": name,
-                "sec": sec,
-                "stages": len(new),
-                "shuffle_mb": sum(s.get("shuffleWriteBytes", 0) for s in new)
-                / 1e6,
-                "shuffle_rows": sum(
-                    s.get("shuffleWriteRecords", 0) for s in new
-                ),
-            }
+        w = shuffle_write(
+            spark,
+            lambda: queries[name](spark, args.sf)
+            .write.format("noop")
+            .mode("overwrite")
+            .save(),
         )
+        rows.append((name, time.time() - t0, w))
         print(
-            f"{name:30s} {rows[-1]['shuffle_mb']:9.2f} MB "
-            f"{rows[-1]['shuffle_rows']:>10} rows {len(new):>3} stages "
-            f"{sec:6.2f}s"
+            f"{name:30s} {w.bytes / 1e6:9.2f} MB {w.records:>10} rows "
+            f"{w.stages:>3} stages {rows[-1][1]:6.2f}s"
         )
+    spark.stop()
 
     if args.check:
-        breaches = [
-            r
-            for r in rows
-            if r["shuffle_mb"]
-            > budget[r["name"]] * args.budget_scale
-        ]
-        spark.stop()
-        if breaches:
-            for r in breaches:
-                print(
-                    f"BREACH {r['name']}: {r['shuffle_mb']:.2f} MB > "
-                    f"{budget[r['name']] * args.budget_scale:.2f}"
-                    " MB budget — same-shuffle fattening?"
-                )
-            return 1
-        print(f"OK: {len(rows)} queries within shuffle-byte budgets")
-        return 0
+        breaches = [(n, w) for n, _, w in rows if w.bytes / 1e6 > budget[n]]
+        for n, w in breaches:
+            print(
+                f"BREACH {n}: {w.bytes / 1e6:.2f} MB > {budget[n]:.2f}"
+                " MB budget — same-shuffle fattening?"
+            )
+        if not breaches:
+            print(f"OK: {len(rows)} queries within shuffle-byte budgets")
+        return 1 if breaches else 0
 
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -421,14 +380,12 @@ def main() -> int:
             "| Query | Shuffle write | Shuffle rows | Stages | Wall |\n"
             "|---|---|---|---|---|\n"
         )
-        for r in rows:
+        for n, sec, w in rows:
             f.write(
-                f"| {r['name']} | {r['shuffle_mb']:.2f} MB | "
-                f"{r['shuffle_rows']} | {r['stages']} | "
-                f"{r['sec']:.2f}s |\n"
+                f"| {n} | {w.bytes / 1e6:.2f} MB | {w.records} | "
+                f"{w.stages} | {sec:.2f}s |\n"
             )
     print(f"wrote {out}")
-    spark.stop()
     return 0
 
 
