@@ -1028,16 +1028,20 @@ def _sb_score_with_model(docs: DataFrame, model: tuple) -> DataFrame:
 
     Partitioning (r12, guide §2.4 "two operations keyed the same way
     can share one exchange"): every corpus-side operation here keys on
-    doc_id — the (doc_id, tg) pre-aggregation, the per-doc score
-    aggregation, and the full-corpus anchor join — so ONE explicit
-    hash repartition on doc_id before the explode establishes a
-    partitioning all three reuse (HashPartitioning(doc_id) satisfies
-    ClusteredDistribution(doc_id, tg)). Before this the plan shuffled
-    the corpus three more times: exploded (doc, tg) rows into the
-    pre-agg, scored rows into the per-doc agg, and both anchor-join
-    sides. At 100 TB the single shuffle moves raw doc text ONCE
-    (~corpus bytes) instead of exploded trigram strings (~3x corpus
-    bytes) plus two doc-row passes — fewer bytes AND fewer exchanges.
+    doc_id — the (doc_id, tg) pre-aggregation and the per-doc score
+    aggregation — so ONE explicit hash repartition on doc_id before
+    the explode establishes a partitioning both reuse
+    (HashPartitioning(doc_id) satisfies ClusteredDistribution(doc_id,
+    tg)). Docs with no trigram keep their row through explode_outer (a
+    NULL tg that counts k = 0), so no anchor join back to `docs` is
+    needed: column pruning narrows such a join's side to doc_id, so it
+    cannot reuse the scoring side's exchange and shuffles the corpus a
+    second time. Before r12 the plan shuffled the corpus three more
+    times: exploded (doc, tg) rows into the pre-agg, scored
+    rows into the per-doc agg, and both anchor-join sides. At 100 TB
+    the single shuffle moves raw doc text ONCE (~corpus bytes) instead
+    of exploded trigram strings (~3x corpus bytes) plus two doc-row
+    passes — fewer bytes AND fewer exchanges.
     The explode fan-out lands post-shuffle, so per-task width matches
     the old round-robin path."""
     cnt2, ctx2, tot2, cnt3, ctx3 = model
@@ -1057,10 +1061,10 @@ def _sb_score_with_model(docs: DataFrame, model: tuple) -> DataFrame:
     # scoring: one corpus explode, pre-aggregated per (doc, trigram)
     doc_grams = (
         docs_p.select(
-            "doc_id", F.explode(ngrams(tokenize("text"), 3)).alias("tg")
+            "doc_id", F.explode_outer(ngrams(tokenize("text"), 3)).alias("tg")
         )
         .groupBy("doc_id", "tg")
-        .agg(F.count("*").alias("k"))
+        .agg(F.count("tg").alias("k"))
     )
     p = F.split("tg", " ")
     g = doc_grams.select(
@@ -1109,21 +1113,16 @@ def _sb_score_with_model(docs: DataFrame, model: tuple) -> DataFrame:
         ).alias("s_ppm"),
         F.expr("CASE WHEN c3 IS NULL THEN k ELSE 0 END").alias("bo"),
     )
-    scored = s.groupBy("doc_id").agg(
-        F.sum("k").alias("n_trigrams"),
-        F.sum("bo").alias("n_backoff"),
+    # a doc with no trigram has only its k = 0 row: NULL score
+    return s.groupBy("doc_id").agg(
+        F.sum("k").cast("bigint").alias("n_trigrams"),
+        F.sum("bo").cast("bigint").alias("n_backoff"),
         F.expr(
-            "sum(k * CAST(s_ppm AS DECIMAL(38,0))) div sum(k)"
-        ).alias("sb_score_ppm"),
-    )
-    # anchor reads docs_p so both join sides are already doc_id-
-    # partitioned — no exchange on either side (the exchange subtree
-    # is shared with the scoring branch via ReusedExchange)
-    return docs_p.select("doc_id").join(scored, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce("n_trigrams", F.lit(0)).cast("bigint").alias("n_trigrams"),
-        F.coalesce("n_backoff", F.lit(0)).cast("bigint").alias("n_backoff"),
-        F.col("sb_score_ppm").cast("bigint").alias("sb_score_ppm"),
+            "CASE WHEN sum(k) > 0"
+            " THEN sum(k * CAST(s_ppm AS DECIMAL(38,0))) div sum(k) END"
+        )
+        .cast("bigint")
+        .alias("sb_score_ppm"),
     )
 
 

@@ -749,6 +749,21 @@ def _seed_centroids(vec: DataFrame, k: int = K_CENTROIDS) -> DataFrame:
     )
 
 
+def _train_centroids(
+    vec: DataFrame, k: int = K_CENTROIDS, train: DataFrame | None = None
+) -> DataFrame:
+    """The shared k-means trainer: seeded from `vec`, then 2 Lloyd
+    steps over `train` (default: `vec`), unrolled as in the oracle
+    SQL. Centroids are k rows; localCheckpoint materializes each step
+    so later assignments don't recompute the whole previous-step
+    lineage (measured 6.6s -> ~3s at sf1 soak)."""
+    train = vec if train is None else train
+    cents = _seed_centroids(vec, k)
+    for _ in range(2):
+        cents = _lloyd_step(train, cents).localCheckpoint()
+    return cents
+
+
 def _ivf_search(
     spark: SparkSession,
     sf_dir: str,
@@ -826,12 +841,7 @@ def sim_ivf_topk(
     tune(spark)
     vec = _cached_micro_arr(spark, sf_dir)  # reused by 3 assignments + 2 mean updates
 
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):  # Lloyd iterations, unrolled in the oracle SQL
-        # centroids are k rows; localCheckpoint materializes each
-        # iteration so later assignments don't recompute the whole
-        # previous-iteration lineage (measured 6.6s -> ~3s at sf1 soak)
-        cents = _lloyd_step(vec, cents).localCheckpoint()
+    cents = _train_centroids(vec, k)
     return _ivf_search(spark, sf_dir, vec, cents, nprobe)
 
 
@@ -856,9 +866,7 @@ def sim_ivf_sampled_topk(
     vec = _cached_micro_arr(spark, sf_dir)  # final assignment + rerank reuse
     train = vec.where(F.col("vec_id") % IVF_SAMPLE_MOD == 0).localCheckpoint()
 
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):
-        cents = _lloyd_step(train, cents).localCheckpoint()
+    cents = _train_centroids(vec, k, train)
     return _ivf_search(spark, sf_dir, vec, cents, nprobe)
 
 
@@ -887,9 +895,7 @@ def build_ivf_base_index(
     train = base.where(
         F.col("vec_id") % IVF_SAMPLE_MOD == 0
     ).localCheckpoint()
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):
-        cents = _lloyd_step(train, cents).localCheckpoint()
+    cents = _train_centroids(vec, k, train)
     posting = _assign_inrow(base, cents).select("vec_id", "cid").localCheckpoint(
         eager=False
     )
@@ -1191,9 +1197,7 @@ def dedup_semantic(
     vec = _cached_micro_arr(spark, sf_dir)
     if k == "auto":
         k = _auto_k(load_table(spark, sf_dir, "embeddings").count())
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):
-        cents = _lloyd_step(vec, cents).localCheckpoint()
+    cents = _train_centroids(vec, k)
     assign = _assign_inrow(vec, cents).select("vec_id", "cid")
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
     m = (
@@ -1392,9 +1396,7 @@ def sim_ivf_posting_stats(
     totals — nothing new shuffles beyond the 2-exchange stats core."""
     tune(spark)
     vec = _cached_micro_arr(spark, sf_dir)
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):
-        cents = _lloyd_step(vec, cents).localCheckpoint()
+    cents = _train_centroids(vec, k)
     return posting_stats_frame(
         _assign_inrow(vec, cents).select("vec_id", "cid")
     )
@@ -1989,8 +1991,8 @@ def sim_ivfpq_topk(
     Search cost: |probed postings| skinny code rows + |queries|·100
     real-vector loads, independent of corpus bytes.
 
-    Everything is the shared machinery: _seed_centroids/_lloyd_update
-    (IVF trainer), _pq_subvectors/_pq_update/_pq_assign (PQ trainer),
+    Everything is the shared machinery: _train_centroids (IVF
+    trainer), _pq_subvectors/_pq_update/_pq_assign (PQ trainer),
     _exact_cosine_rerank (refine) — and the oracle composes the same
     two unrolled-CTE blocks with the PQ assignment prefixed pa* to
     keep the namespaces apart."""
@@ -2008,9 +2010,7 @@ def sim_ivfpq_topk(
     # other's tasks. Results are untouched (the chains share only the
     # persisted vec/subv frames, which are read-only here).
     def _train_coarse() -> tuple[DataFrame, DataFrame]:
-        cents = _seed_centroids(vec, k)
-        for _ in range(2):
-            cents = _lloyd_step(vec, cents).localCheckpoint()
+        cents = _train_centroids(vec, k)
         # shared 1-row centroid frame: posting + probes
         return cents, _cents_row(cents).localCheckpoint()
 
@@ -2315,9 +2315,7 @@ def corpus_cluster_balance_sample(
     vec = _cached_micro_arr(spark, sf_dir)
     if k == "auto":
         k = _auto_k(load_table(spark, sf_dir, "embeddings").count())
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):
-        cents = _lloyd_step(vec, cents).localCheckpoint()
+    cents = _train_centroids(vec, k)
     assign = _assign_inrow(vec, cents).select("vec_id", "cid").localCheckpoint(
         eager=False
     )
@@ -3142,9 +3140,7 @@ def corpus_cluster_top_terms(
     vec = _cached_micro_arr(spark, sf_dir)
     if k == "auto":
         k = _auto_k(load_table(spark, sf_dir, "embeddings").count())
-    cents = _seed_centroids(vec, k)
-    for _ in range(2):
-        cents = _lloyd_step(vec, cents).localCheckpoint()
+    cents = _train_centroids(vec, k)
     assign = _assign_inrow(vec, cents).select("vec_id", "cid")
 
     docs = load_documents_parallel(spark, sf_dir)

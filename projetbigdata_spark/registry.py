@@ -30,8 +30,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #     oldest (r9-latest) rows, so the slot does double duty. The 39
 #     r9-latest leftovers reach the floor at r14 and must fill ~all of
 #     that round's block.
+# Leading them: the three rows whose argmax language guess was
+# rewritten in r13 after their last green driver check (r12).
 # collect() raises if a priority name is not registered.
 _PRIORITY = (
+    "text_lang_guess_multi",
+    "corpus_ccnet_select_guessed_multi",
+    "corpus_ccnet_select_guessed",
     # --- tier B (35): every r8-latest row — the 5-round floor hits
     # them this round; freshness_report --simulate-next verified ---
     "corpus_softdedup_weights",

@@ -4,12 +4,13 @@ its oracle_sql() on DuckDB at sf0.01 — sorted columns, 6dp float
 rounding, order-insensitive multiset compare. Mirrors the external
 verify driver."""
 
+import os
 import sys
 from collections import Counter
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 

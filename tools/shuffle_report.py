@@ -31,8 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# bench headliners + the curation tier (same set test_bench_budget pins,
-# plus the late-r3 operators whose scale posture SCALE.md documents)
+# bench headliners + the curation tier (the 21 names test_plans.py pins
+# by stage count, plus the late-r3 operators whose scale posture
+# SCALE.md documents)
 QUERIES = [
     "vocab_topk",
     "q1_pricing_summary",
