@@ -35,8 +35,8 @@ def count_op(df: DataFrame, op: str) -> int:
     return physical_plan(df).count(op)
 
 
-def assert_no_cartesian(df: DataFrame, name: str = "") -> None:
-    plan = physical_plan(df)
+def assert_no_cartesian(plan: str, name: str = "") -> None:
+    """`plan` is physical_plan() text."""
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
         assert bad not in plan, f"{name}: unexpected {bad} in plan"
 

@@ -8,6 +8,7 @@ future oracle. DuckDB-only — no Spark session, runs in seconds."""
 from __future__ import annotations
 
 import hashlib
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
@@ -43,14 +44,21 @@ def _run_all(tz: str) -> dict[str, str]:
     return out
 
 
+ZONES = ["America/New_York", "Asia/Tokyo"]
+
+
 @pytest.fixture(scope="module")
-def utc():
-    return _run_all("UTC")
+def hashes():
+    """UTC and every swept zone, one connection each, run concurrently
+    (DuckDB releases the GIL while a query executes)."""
+    zones = ["UTC", *ZONES]
+    with ThreadPoolExecutor(len(zones)) as pool:
+        return dict(zip(zones, pool.map(_run_all, zones)))
 
 
-@pytest.mark.parametrize("tz", ["America/New_York", "Asia/Tokyo"])
-def test_every_oracle_is_timezone_invariant(utc, tz):
-    other = _run_all(tz)
+@pytest.mark.parametrize("tz", ZONES)
+def test_every_oracle_is_timezone_invariant(hashes, tz):
+    utc, other = hashes["UTC"], hashes[tz]
     drifted = sorted(n for n in utc if utc[n] != other[n])
     assert not drifted, (
         f"oracles shift under TimeZone={tz}: {drifted} — see the "

@@ -123,12 +123,23 @@ CARTESIAN_OK = {
 }
 
 
+# Physical plan text per registered query, built once per session: the
+# cartesian sweep and the exchange and nested-loop pins read the same
+# plan instead of rebuilding the query (and its eager barriers) each.
+_PLANS: dict[str, str] = {}
+
+
+def _plan(spark, name: str) -> str:
+    if name not in _PLANS:
+        _PLANS[name] = pi.physical_plan(QUERIES[name](spark, SF_CHECK))
+    return _PLANS[name]
+
+
 @pytest.mark.parametrize(
     "name", sorted(n for n in QUERIES if n not in CARTESIAN_OK)
 )
 def test_no_cartesian_product(spark, name):
-    df = QUERIES[name](spark, SF_CHECK)
-    pi.assert_no_cartesian(df, name)
+    pi.assert_no_cartesian(_plan(spark, name), name)
 
 
 def test_q1_filter_pushed_to_scan(spark):
@@ -561,7 +572,7 @@ def test_shuffle_write_reads_the_stages_run_inside(spark):
 
 @pytest.mark.parametrize("name", sorted(EXCHANGE_BUDGET))
 def test_headline_exchange_budget(spark, name):
-    plan = pi.physical_plan(QUERIES[name](spark, SF_CHECK))
+    plan = _plan(spark, name)
     n = plan.count("Exchange")
     assert n <= EXCHANGE_BUDGET[name], (
         f"{name}: {n} exchanges, budget {EXCHANGE_BUDGET[name]} — a new "
@@ -627,7 +638,7 @@ NESTED_LOOP_BUDGET = {"sim_topk_bruteforce": 1, "sim_ivf_topk": 2}
 
 @pytest.mark.parametrize("name", sorted(NESTED_LOOP_BUDGET))
 def test_headline_nested_loop_budget(spark, name):
-    plan = pi.physical_plan(QUERIES[name](spark, SF_CHECK))
+    plan = _plan(spark, name)
     n = plan.count("BroadcastNestedLoopJoin") + plan.count("CartesianProduct")
     assert n <= NESTED_LOOP_BUDGET[name], (
         f"{name}: {n} nested-loop joins, budget {NESTED_LOOP_BUDGET[name]} "
