@@ -35,12 +35,6 @@ def count_op(df: DataFrame, op: str) -> int:
     return physical_plan(df).count(op)
 
 
-def assert_no_cartesian(plan: str, name: str = "") -> None:
-    """`plan` is physical_plan() text."""
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
-        assert bad not in plan, f"{name}: unexpected {bad} in plan"
-
-
 def assert_broadcast_join(df: DataFrame, name: str = "", at_least: int = 1) -> None:
     n = count_op(df, "BroadcastHashJoin")
     assert n >= at_least, f"{name}: expected >= {at_least} broadcast joins, got {n}"

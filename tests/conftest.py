@@ -1,22 +1,21 @@
-"""Shared fixtures: one SparkSession per test run + a DuckDB oracle
-comparator that mimics the driver's check (row-count + schema +
-order-insensitive value compare)."""
+"""Shared fixtures: one SparkSession per test run, a DuckDB oracle
+over the sf0.01 tables, and ``assert_matches_oracle``, which applies
+the driver's own gate (row count, sorted column names, an
+order-insensitive hash of values and their kinds) from
+``tools/local_correctness``."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
 import pytest
 
+from projetbigdata_spark.sources.catalog import TABLES
+from tools.local_correctness import compare, mismatch
+
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CHECK = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 @pytest.fixture(scope="session")
@@ -41,44 +40,8 @@ def oracle():
     con.close()
 
 
-def _norm_cell(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # absorb sub-ulp summation-order noise the driver's rounding
-        # inside each query should already have removed
-        return round(v, 6)
-    if isinstance(v, list):
-        return tuple(_norm_cell(x) for x in v)
-    return v
-
-
-def _norm_rows(rows):
-    return sorted(
-        (tuple(_norm_cell(v) for v in row) for row in rows),
-        key=lambda r: tuple(str(x) for x in r),
-    )
-
-
 def assert_matches_oracle(spark_df, oracle_con, sql, name=""):
-    """Driver-style compare: same column names, same row multiset."""
-    spark_cols = sorted(spark_df.columns)
-    spark_rows = [
-        tuple(row[c] for c in spark_cols) for row in spark_df.collect()
-    ]
-    res = oracle_con.execute(sql)
-    duck_cols_raw = [d[0] for d in res.description]
-    duck_rows_raw = res.fetchall()
-    order = sorted(range(len(duck_cols_raw)), key=lambda i: duck_cols_raw[i])
-    duck_cols = [duck_cols_raw[i] for i in order]
-    duck_rows = [tuple(r[i] for i in order) for r in duck_rows_raw]
-
-    assert spark_cols == duck_cols, (
-        f"{name}: column mismatch spark={spark_cols} duck={duck_cols}"
-    )
-    assert len(spark_rows) == len(duck_rows), (
-        f"{name}: row count spark={len(spark_rows)} duck={len(duck_rows)}"
-    )
-    ns, nd = _norm_rows(spark_rows), _norm_rows(duck_rows)
-    for i, (a, b) in enumerate(zip(ns, nd)):
-        assert a == b, f"{name}: row {i} differs\n spark={a}\n duck ={b}"
+    """The driver's gate (``tools/local_correctness.compare``) on the
+    collected Spark frame against the oracle's."""
+    rec = compare(spark_df.toPandas(), oracle_con.execute(sql).df())
+    assert rec["status"] == "pass", f"{name}: {mismatch(rec)}"

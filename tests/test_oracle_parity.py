@@ -1,6 +1,9 @@
-"""The local twin of the driver's correctness gate: every registered
-query with an oracle runs at sf0.01 and must match DuckDB exactly
-(column names, row count, order-insensitive values).
+"""The driver's correctness gate on the tuned session: every
+registered query with an oracle runs at sf0.01 and must pass
+``tools/local_correctness.compare`` against DuckDB (row count, sorted
+column names, an order-insensitive hash of every value and its kind,
+so an int column the oracle turns into a double fails). The same
+tool runs the gate on the driver's vanilla session.
 
 The same run holds each budgeted query's shuffle-write bytes under
 its ceiling in tools/shuffle_report.py. Exchange counts

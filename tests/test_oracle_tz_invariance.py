@@ -7,19 +7,14 @@ future oracle. DuckDB-only — no Spark session, runs in seconds."""
 
 from __future__ import annotations
 
-import hashlib
 from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import pytest
 
 from projetbigdata_spark import registry
-from tests.conftest import SF_CHECK
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from tests.conftest import SF_CHECK, TABLES
+from tools.local_correctness import _value_hash
 
 _, ORACLES = registry.collect()
 
@@ -32,14 +27,7 @@ def _run_all(tz: str) -> dict[str, str]:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{SF_CHECK}/{t}.parquet')"
         )
-    out = {}
-    for name, sql in ORACLES.items():
-        df = con.execute(sql).df()
-        cols = sorted(df.columns)
-        h = hashlib.sha256()
-        for row in sorted(map(str, df[cols].itertuples(index=False))):
-            h.update(row.encode())
-        out[name] = h.hexdigest()
+    out = {n: _value_hash(con.execute(sql).df()) for n, sql in ORACLES.items()}
     con.close()
     return out
 

@@ -1,15 +1,22 @@
-"""Local replica of the driver's correctness gate.
+"""Local replica of the driver's correctness check.
 
-Runs every ``queries()`` entry at sf0.01 next to its ``oracle_sql()``
-DuckDB twin and compares row count, column names, pandas dtypes, and a
-dtype-strict value hash (columns sorted by name, rows sorted) — the
-same failure surface the driver's CORRECTNESS_r{N}.json records.
+Builds the driver's vanilla SparkSession (``local[8]``, 8 shuffle
+partitions, UI off, none of ``get_spark``'s confs), imports
+``__spark_entry__``, checks that ``entry(spark)`` returns rows, then
+runs every ``queries()`` entry next to its ``oracle_sql()`` DuckDB
+twin and gates each pair with ``compare``: row count, sorted column
+names, and an order-insensitive hash of every cell's string form and
+value kind (int/float/str/Timestamp), so int64 5 != float64 5.0 and a
+1e-9 float drift fails. Pandas dtypes are reported in the JSON, not
+gated. pytest's oracle-parity test applies the same ``compare`` on
+the tuned session; perfbench loads ``_value_hash`` from this file.
 
 Also records per-query wall time so the slow families (which burn the
-driver's fixed check budget) are visible.
+driver's fixed check budget) are visible. A query that raises is
+retried once.
 
 Usage:
-    python tools/local_correctness.py [--sf /root/testdata/sf0.01]
+    python tools/local_correctness.py [--sf SF_DIR]
         [--only prefix1,prefix2] [--json out.json]
 """
 
@@ -28,22 +35,25 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from projetbigdata_spark.sources.catalog import TABLES  # noqa: E402
 
 
-def _value_hash(df: pd.DataFrame) -> str:
-    """Dtype-strict, order-insensitive hash: sort columns by name, sort
-    rows by their string form, hash the repr of every cell *including*
-    its Python/numpy type so int64 5 != float64 5.0."""
-    cols = sorted(df.columns)
-    df = df[cols]
-    rows = []
-    for row in df.itertuples(index=False):
-        rows.append(tuple((type(v).__name__, str(v)) for v in row))
+def _cells(df: pd.DataFrame) -> list[tuple[tuple[str, str], ...]]:
+    """What ``_value_hash`` digests: each row as (value kind, string
+    form) cells, columns sorted by name, rows sorted by string form.
+    The kind is the Python type a cell collects to (int, float, str,
+    Timestamp, ...), so int64 5 != float64 5.0 while int32/int64 and
+    datetime64 ns/us agree."""
+    df = df[sorted(df.columns)]
+    rows = [
+        tuple((type(v).__name__, str(v)) for v in row)
+        for row in df.itertuples(index=False)
+    ]
     rows.sort(key=lambda r: tuple(x[1] for x in r))
+    return rows
+
+
+def _digest(rows: list[tuple[tuple[str, str], ...]]) -> str:
     h = hashlib.sha256()
     for r in rows:
         for tname, s in r:
@@ -55,21 +65,18 @@ def _value_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
-def _check_one(spark, con, fn, oracle: str | None, sf: str) -> dict:
-    """One full query-vs-oracle comparison; raises on any failure to
-    produce the Spark frame so the caller can retry."""
-    rec: dict = {}
-    t0 = time.time()
-    sdf = fn(spark, sf).toPandas()
-    rec["spark_sec"] = round(time.time() - t0, 2)
-    rec["spark_rows"] = len(sdf)
-    if oracle is None:
-        rec["status"] = "rows_only"
-        return rec
-    t1 = time.time()
-    odf = con.execute(oracle).df()
-    rec["oracle_sec"] = round(time.time() - t1, 2)
-    rec["oracle_rows"] = len(odf)
+def _value_hash(df: pd.DataFrame) -> str:
+    """Order-insensitive hash of a frame's values and value kinds."""
+    return _digest(_cells(df))
+
+
+def compare(sdf: pd.DataFrame, odf: pd.DataFrame) -> dict:
+    """The driver's gate on a collected Spark frame and its oracle's:
+    same row count, same sorted column names, equal ``_value_hash``.
+    Dtypes are reported, not gated (Spark collects datetime64[ns]
+    where DuckDB gives [us]). A value mismatch records the first
+    differing sorted row of each side."""
+    rec: dict = {"spark_rows": len(sdf), "oracle_rows": len(odf)}
     rec["rows_match"] = len(sdf) == len(odf)
     s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
     rec["schema_match"] = s_cols == o_cols
@@ -83,13 +90,51 @@ def _check_one(spark, con, fn, oracle: str | None, sf: str) -> dict:
                 for c, sd, od in zip(s_cols, s_dtypes, o_dtypes)
                 if sd != od
             }
-        rec["hash_match"] = _value_hash(sdf) == _value_hash(odf)
+        s_rows, o_rows = _cells(sdf), _cells(odf)
+        rec["hash_match"] = _digest(s_rows) == _digest(o_rows)
+        if not rec["hash_match"]:
+            i = next(
+                (i for i, (a, b) in enumerate(zip(s_rows, o_rows)) if a != b),
+                min(len(s_rows), len(o_rows)),
+            )
+
+            def row(rows):
+                if i >= len(rows):
+                    return None
+                return {c: f"{s} ({t})" for c, (t, s) in zip(s_cols, rows[i])}
+
+            rec["first_diff"] = {
+                "row": i, "spark": row(s_rows), "oracle": row(o_rows)}
     else:
         rec["dtype_match"] = False
         rec["hash_match"] = False
         rec["cols"] = {"spark": s_cols, "oracle": o_cols}
     ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
     rec["status"] = "pass" if ok else "FAIL"
+    return rec
+
+
+def mismatch(rec: dict) -> str:
+    """The failing parts of a ``compare`` record, as one JSON line."""
+    return json.dumps({
+        k: rec[k] for k in
+        ("rows_match", "schema_match", "dtype_match", "hash_match",
+         "dtypes", "cols", "first_diff") if k in rec})
+
+
+def _check_one(spark, con, fn, oracle: str | None, sf: str) -> dict:
+    """Run one query and its oracle, then ``compare``; raises on any
+    failure to produce the Spark frame so the caller can retry."""
+    t0 = time.time()
+    sdf = fn(spark, sf).toPandas()
+    rec: dict = {"spark_sec": round(time.time() - t0, 2)}
+    if oracle is None:
+        rec.update(spark_rows=len(sdf), status="rows_only")
+        return rec
+    t1 = time.time()
+    odf = con.execute(oracle).df()
+    rec["oracle_sec"] = round(time.time() - t1, 2)
+    rec.update(compare(sdf, odf))
     return rec
 
 
@@ -101,11 +146,23 @@ def main() -> int:
     ap.add_argument("--json", default="")
     args = ap.parse_args()
 
-    from projetbigdata_spark.session import get_spark
-    from projetbigdata_spark import registry
+    from pyspark.sql import SparkSession
 
-    spark = get_spark("local-correctness")
-    queries, oracles = registry.collect()
+    # the driver's own session: none of get_spark's confs
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .config("spark.sql.shuffle.partitions", "8")
+        .config("spark.ui.enabled", "false")
+        .appName("local-correctness")
+        .getOrCreate()
+    )
+    import __spark_entry__ as mod
+
+    n_entry = len(mod.entry(spark).collect())
+    print(f"ENTRY: {n_entry} rows")
+    if not n_entry:
+        raise SystemExit("entry(spark) returned no rows")
+    queries, oracles = mod.queries(), mod.oracle_sql()
 
     con = duckdb.connect()
     for t in TABLES:
@@ -124,11 +181,11 @@ def main() -> int:
         try:
             rec = _check_one(spark, con, fn, oracles.get(name), args.sf)
         except Exception as e:  # noqa: BLE001
-            # retry once: one of seven full r3 driver-sim runs reported
-            # a single unreproducible failure right after a heavy pytest
-            # run (NEXT.md watch item) — absorb load transients, but
-            # record the first error so a genuinely flaky query stays
-            # visible in the JSON.
+            # retry once: one of seven full r3 vanilla-session runs
+            # reported a single unreproducible failure right after a
+            # heavy pytest run (NEXT.md watch item) — absorb load
+            # transients, but record the first error so a genuinely
+            # flaky query stays visible in the JSON.
             first_err = f"{type(e).__name__}: {e}"
             try:
                 rec = _check_one(
@@ -153,12 +210,7 @@ def main() -> int:
             ok = status == "pass"
             n_pass += ok
             n_fail += not ok
-            extra = ""
-            if not ok:
-                extra = " " + json.dumps({
-                    k: rec[k] for k in
-                    ("rows_match", "schema_match", "dtype_match", "hash_match",
-                     "dtypes", "cols") if k in rec})
+            extra = "" if ok else " " + mismatch(rec)
             print(f"{name:40s} {status:4s} {rec['spark_rows']:>8} rows "
                   f"{rec['spark_sec']:>6.2f}s spark "
                   f"{rec['oracle_sec']:>5.2f}s duck{extra}")
